@@ -183,6 +183,74 @@ def test_restart_is_idempotent(multi_batch_outputs):
     assert before == after
 
 
+def test_trigger_jobs_run_in_query_job_group(spark, tmp_path):
+    """Every job the run launches — the family writes the trigger runs
+    from pool threads included — belongs to the query's job group
+    (its runId), so the query's stop() can cancel it and monitoring
+    attributes it to the query."""
+    in_dir = tmp_path / "in"
+    in_dir.mkdir()
+    (in_dir / "tweets.ndjson").write_text(
+        "\n".join(make_tweets(600, seed=5)) + "\n"
+    )
+    sc = spark.sparkContext
+    status = sc._jsc.sc().statusStore()
+
+    def _max_job_id() -> int:
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        jobs = status.jobsList(None)
+        return max(
+            (jobs.apply(i).jobId() for i in range(jobs.size())), default=-1
+        )
+
+    first = _max_job_id() + 1
+    [q] = run_streaming_aggregates(
+        spark, str(in_dir), str(tmp_path / "store"),
+        str(tmp_path / "ckpt"), available_now=True,
+    )
+    launched = set(range(first, _max_job_id() + 1))
+    in_group = set(sc.statusTracker().getJobIdsForGroup(str(q.runId)))
+    assert AggregateStore(spark, str(tmp_path / "store")).read(
+        "counts"
+    ).count() > 0
+    assert launched and launched <= in_group, sorted(launched - in_group)
+
+
+def test_run_concurrently_inherits_group_and_joins_before_raising(spark):
+    """Pool threads carry the caller's job group, and a failing write
+    neither cancels its siblings nor hides behind a later failure: all
+    writes finish, then the first error (in submission order) raises."""
+    import threading
+
+    from tweetaggregates_spark.session import run_concurrently
+
+    sc = spark.sparkContext
+    release = threading.Event()
+    seen, done = [], []
+
+    def _ok():
+        seen.append(sc.getLocalProperty("spark.jobGroup.id"))
+        assert release.wait(timeout=30)
+        done.append(True)
+
+    def _first():
+        release.set()
+        raise ValueError("first")
+
+    def _second():
+        raise KeyError("second")
+
+    sc.setJobGroup("run-concurrently-test", "pool attribution")
+    try:
+        with pytest.raises(ValueError, match="first"):
+            run_concurrently(spark, [_first, _ok, _second])
+    finally:
+        for prop in ("jobGroup.id", "job.description", "job.interruptOnCancel"):
+            sc.setLocalProperty(f"spark.{prop}", None)
+    assert seen == ["run-concurrently-test"]
+    assert done == [True]
+
+
 def test_manual_variant_matches_native(spark, tmp_path):
     """The carry-parquet (manual) and native-state pipelines must leave
     IDENTICAL stores — same families, same rows — over a multi-batch

@@ -322,26 +322,35 @@ class TestPrimitives:
             [],
         )
 
-    def test_commit_bases_orphan_sweep_and_order(self, spark, tmp_path):
+    @pytest.mark.parametrize("n_frames", [2, 4])
+    def test_commit_bases_orphan_sweep_and_order(
+        self, spark, tmp_path, n_frames
+    ):
+        # with 4 frames the temps after the first are written
+        # concurrently; distinct row counts per family pin that each
+        # temp lands under its own family
         root = str(tmp_path)
-        df = spark.range(3).select(F.col("id").alias("x"))
-        # plant the crash residue: non-final family already renamed
-        os.makedirs(f"{root}/sidecar/v=7/stale", exist_ok=True)
-        vstore.commit_bases(
-            root, [("sidecar", df), ("main", df)], 7
-        )
-        assert vstore.versions(f"{root}/sidecar") == [7]
-        assert vstore.versions(f"{root}/main") == [7]
-        assert not os.path.exists(f"{root}/sidecar/v=7/stale")
-        assert spark.read.parquet(f"{root}/main/v=7").count() == 3
+        subs = [f"sidecar{i}" for i in range(n_frames - 1)] + ["main"]
+        frames = [
+            (sub, spark.range(3 + i).select(F.col("id").alias("x")))
+            for i, sub in enumerate(subs)
+        ]
+        # plant the crash residue: non-final families already renamed
+        for sub in subs[:-1]:
+            os.makedirs(f"{root}/{sub}/v=7/stale", exist_ok=True)
+        vstore.commit_bases(root, frames, 7)
+        for i, sub in enumerate(subs):
+            assert vstore.versions(f"{root}/{sub}") == [7]
+            assert not os.path.exists(f"{root}/{sub}/v=7/stale")
+            assert spark.read.parquet(f"{root}/{sub}/v=7").count() == 3 + i
         # the FINAL family is the commit point: it must not silently
         # replace a live base unless allow_replace is set
         with pytest.raises(OSError):
-            vstore.commit_bases(root, [("sidecar", df), ("main", df)], 7)
-        vstore.commit_bases(
-            root, [("sidecar", df), ("main", df)], 7, allow_replace=True
+            vstore.commit_bases(root, frames, 7)
+        vstore.commit_bases(root, frames, 7, allow_replace=True)
+        assert (
+            spark.read.parquet(f"{root}/main/v=7").count() == 3 + n_frames - 1
         )
-        assert spark.read.parquet(f"{root}/main/v=7").count() == 3
 
     def test_cleanup_after_compact(self, tmp_path):
         root = str(tmp_path)

@@ -11,6 +11,7 @@ run their build jobs; their plan files cover the returned frame).
 
 from __future__ import annotations
 
+import argparse
 import os
 import sys
 
@@ -21,16 +22,15 @@ from tweetaggregates_spark.session import get_spark
 
 
 def main() -> int:
-    args = [a for a in sys.argv[1:] if not a.startswith("--")]
-    tag, names = args[0], args[1].split(",")
     sf_dir = "/root/testdata/sf0.1"
-    suffix = "before"
-    argv = sys.argv[1:]
-    for i, a in enumerate(argv):
-        if a == "--sf":
-            sf_dir = argv[i + 1]
-        if a == "--suffix":
-            suffix = argv[i + 1]
+    ap = argparse.ArgumentParser(description="Dump formatted query plans.")
+    ap.add_argument("tag", help="output directory under plans/")
+    ap.add_argument("entries", help="comma-separated registry entries")
+    ap.add_argument("--sf", default=sf_dir, help="data dir")
+    ap.add_argument("--suffix", default="before", help="file name suffix")
+    args = ap.parse_args()
+    tag, names = args.tag, args.entries.split(",")
+    sf_dir, suffix = args.sf, args.suffix
     here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     out_dir = os.path.join(here, "plans", tag)
     os.makedirs(out_dir, exist_ok=True)

@@ -27,6 +27,7 @@ def main() -> int:
     runs_n = int(sys.argv[3]) if len(sys.argv) > 3 else 3
     sys.path.insert(0, repo)
     import __spark_entry__ as entry_mod
+    from bench import _reset_state
     from tweetaggregates_spark.session import get_spark
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -39,15 +40,8 @@ def main() -> int:
         ).format("noop").save()
     out = {}
     for name in names:
-        # same per-entry isolation as bench.py (_reset_state)
-        import gc
-
-        gc.collect()
-        spark.catalog.clearCache()
-        try:
-            spark.sparkContext._jvm.System.gc()
-        except Exception:
-            pass
+        # same per-entry isolation as bench.py
+        _reset_state(spark)
         runs = []
         for _ in range(runs_n):
             t0 = time.perf_counter()

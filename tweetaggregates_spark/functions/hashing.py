@@ -50,7 +50,3 @@ def seeded_hash64_pair(col: Column | str, seed: int) -> tuple[Column, Column]:
 def duck_hash64(expr: str) -> str:
     """The DuckDB twin of hash64(), as a SQL fragment."""
     return f"(('0x' || substr(md5({expr}), 1, 15))::BIGINT)"
-
-
-def duck_seeded_hash64(expr: str, seed: int) -> str:
-    return duck_hash64(f"concat('{seed}:', {expr})")

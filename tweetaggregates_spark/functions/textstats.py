@@ -64,11 +64,3 @@ def duck_tokens(expr: str) -> str:
         f"list_filter(regexp_split_to_array(lower({expr}), '{TOKEN_SPLIT_RE}'),"
         " x -> x <> '')"
     )
-
-
-def duck_word_shingles(toks_expr: str, k: int = 3) -> str:
-    # DuckDB list slicing is 1-based inclusive; range() end-exclusive.
-    return (
-        f"[array_to_string(({toks_expr})[i:i+{k - 1}], ' ') "
-        f"for i in range(1, len({toks_expr}) - {k - 2})]"
-    )

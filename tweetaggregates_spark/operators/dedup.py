@@ -28,6 +28,7 @@ from tweetaggregates_spark.functions.hashing import (
     seeded_hash64_pair,
 )
 from tweetaggregates_spark.functions.textstats import tokens, word_shingles
+from tweetaggregates_spark.session import run_concurrently
 
 N_MINHASH = 16
 N_BANDS = 4  # 4 rows per band
@@ -1248,8 +1249,6 @@ def append_band_index_delta(
     # materializes the checkpoint); the remap and counts writes are
     # then independent jobs over materialized inputs and overlap
     # (guide §2.6).
-    from concurrent.futures import ThreadPoolExecutor
-
     new_rows = new_rows.localCheckpoint(eager=False)
     new_rows.write.mode("overwrite").parquet(f"{path}/bands/v={version}")
 
@@ -1263,17 +1262,7 @@ def append_band_index_delta(
             f"{path}/counts/v={version}"
         )
 
-    # inheritable_thread_target: this append runs inside streaming
-    # triggers, and plain pool workers would not inherit the streaming
-    # job group/tags under pinned-thread mode (ADVICE r15)
-    from pyspark import inheritable_thread_target
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        for f in [
-            pool.submit(inheritable_thread_target(w))
-            for w in (_w_remap, _w_counts)
-        ]:
-            f.result()
+    run_concurrently(new_rows.sparkSession, [_w_remap, _w_counts])
 
 
 def read_band_index_parts(

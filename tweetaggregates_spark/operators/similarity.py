@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 
 from tweetaggregates_spark.functions.vectors import as_double, cosine_sim, norm
 from tweetaggregates_spark.operators.topk import rank_topk
+from tweetaggregates_spark.session import run_concurrently
 
 
 def _normed(df: DataFrame, id_col: str, vec_col: str, extra: list[str] | None = None):
@@ -1406,8 +1407,6 @@ def build_ivf_pq_index(
     # codes write instead of running serially after it (guide-§2.6
     # overlap; the meta pointer still writes strictly LAST, so the
     # crash-safety ordering is unchanged)
-    from concurrent.futures import ThreadPoolExecutor
-
     def _w_codes() -> None:
         codes.withColumn("ingest", F.lit("base")).write.mode(
             "overwrite"
@@ -1419,19 +1418,7 @@ def build_ivf_pq_index(
     def _w_codebook() -> None:
         codebook.write.mode("overwrite").parquet(f"{path}/codebook_{bid}")
 
-    # inheritable_thread_target: builds run inside streaming triggers
-    # too, and plain pool workers would not inherit the streaming job
-    # group/tags under pinned-thread mode — query.stop() could not
-    # cancel these writes (ADVICE r15)
-    from pyspark import inheritable_thread_target
-
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        futures = [
-            pool.submit(inheritable_thread_target(w))
-            for w in (_w_codes, _w_cents, _w_codebook)
-        ]
-        for f in futures:
-            f.result()
+    run_concurrently(spark, [_w_codes, _w_cents, _w_codebook])
     # structural parameters persist in meta (ADVICE r14): a quantizer
     # refresh re-trains with the ORIGINAL n_cells/m/k instead of
     # re-deriving them from the persisted tables (three extra driver
@@ -1609,8 +1596,6 @@ def compact_ivf_pq_index(
     # thread pool (guide §2.6, the build_ivf_pq_index pattern) so the
     # tiny copies back-fill the codes rewrite's tail; the meta pointer
     # below still writes strictly LAST, so crash-safety is unchanged
-    from concurrent.futures import ThreadPoolExecutor
-
     def _w_codes() -> None:
         codes.withColumn("ingest", new_ingest).write.mode(
             "overwrite"
@@ -1632,15 +1617,7 @@ def compact_ivf_pq_index(
             "overwrite"
         ).parquet(f"{path}/codebook_{bid}")
 
-    # inheritable_thread_target: see build_ivf_pq_index (ADVICE r15)
-    from pyspark import inheritable_thread_target
-
-    with ThreadPoolExecutor(max_workers=4) as pool:
-        for f in [
-            pool.submit(inheritable_thread_target(w))
-            for w in (_w_codes, _w_tombs, _w_cents, _w_codebook)
-        ]:
-            f.result()
+    run_concurrently(spark, [_w_codes, _w_tombs, _w_cents, _w_codebook])
     spark.createDataFrame(
         [
             (

@@ -8,6 +8,7 @@ the row path, embarrassingly parallel (no shuffle except noted).
 
 from __future__ import annotations
 
+import functools
 from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
@@ -20,6 +21,7 @@ from tweetaggregates_spark.functions.textstats import (
     tokens,
     word_shingles,
 )
+from tweetaggregates_spark.session import run_concurrently
 
 BPE_ISH_RE = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
 
@@ -709,42 +711,8 @@ def bm25_topk(
     # tokens_col / query_tokens_col: optional pre-tokenized array
     # columns (exactly tokens(text)) so a composed pipeline shares
     # one tokenize pass (dataset_card_v2_docs); value-identical.
-    doc_toks = (
-        F.col(tokens_col) if tokens_col else tokens(F.col(text_col))
-    )
-    tok = df.select(
-        F.col(id_col).alias("doc_id"),
-        F.posexplode(doc_toks).alias("pos", "token"),
-    )
-    # ONE token scan + one (doc, token) shuffle: tf MATERIALIZES
-    # (lazy local checkpoint — computed on first action, then shared),
-    # and dl / df / total_tokens all derive from it by value-identical
-    # aggregation (dl = Σ tf per doc = the raw token count; total =
-    # Σ tf overall). tf is consumed four times in the scoring plan;
-    # unmaterialized, Spark re-ran the tokenize+explode+groupBy
-    # pipeline per consumer (r15 measured: 4.6 s -> 2.x s at sf0.1,
-    # 44-Exchange plan collapses). This is also the honest 100 TB
-    # shape: the materialized tf IS the inverted index a deployment
-    # persists (build_token_index); only n_docs needs the corpus
-    # (tokenless docs never join tf but still count in idf).
-    tf = (
-        tok.groupBy("doc_id", "token")
-        .agg(F.count(F.lit(1)).alias("tf"))
-        .localCheckpoint(eager=False)
-    )
-    dl = tf.groupBy("doc_id").agg(F.sum("tf").alias("dl"))
-    dft = tf.groupBy("token").agg(F.count(F.lit(1)).alias("doc_freq"))
-    stats = df.agg(
-        F.countDistinct(id_col).alias("n_docs"),
-    ).crossJoin(
-        tf.agg(
-            F.coalesce(F.sum("tf"), F.lit(0).cast("long")).alias(
-                "total_tokens"
-            )
-        )
-    )
     return _bm25_score(
-        tf, dl, dft, stats, queries,
+        _token_index(df, text_col, id_col, tokens_col), queries,
         query_id_col=query_id_col, query_text_col=query_text_col,
         n_query_terms=n_query_terms, k=k, k1=k1, b=b,
         query_tokens_col=query_tokens_col,
@@ -752,10 +720,7 @@ def bm25_topk(
 
 
 def _bm25_score(
-    tf: DataFrame,
-    dl: DataFrame,
-    dft: DataFrame,
-    stats: DataFrame,
+    index: TokenIndex,
     queries: DataFrame,
     query_id_col: str = "query_id",
     query_text_col: str = "text",
@@ -767,9 +732,7 @@ def _bm25_score(
 ) -> DataFrame:
     """The BM25 scoring plan over MATERIALIZED index stats — shared by
     the scan-per-call ``bm25_topk`` and the persisted-index
-    ``bm25_topk_indexed``. Inputs: tf(doc_id, token, tf),
-    dl(doc_id, dl), dft(token, doc_freq), stats 1-row
-    (n_docs, total_tokens). ``query_tokens_col``: optional
+    ``bm25_topk_indexed``. ``query_tokens_col``: optional
     pre-tokenized query array column (see ``bm25_topk``)."""
     from pyspark.sql import Window
 
@@ -810,10 +773,10 @@ def _bm25_score(
     )
     scored = (
         F.broadcast(qterms)
-        .join(tf, "token")
-        .join(dl, "doc_id")
-        .join(dft, "token")
-        .crossJoin(F.broadcast(stats))
+        .join(index.tf, "token")
+        .join(index.dl, "doc_id")
+        .join(index.dft, "token")
+        .crossJoin(F.broadcast(index.stats))
         .select("query_id", "doc_id", w_term.alias("w"))
     )
     agg = scored.groupBy("query_id", "doc_id").agg(
@@ -1812,46 +1775,71 @@ def html_main_text(
 
 
 class TokenIndex(NamedTuple):
-    """Folded view of the persisted retrieval index: exactly the four
-    materialized stats ``_bm25_score`` consumes."""
+    """The retrieval index stats — built from a corpus
+    (``_token_index``) or folded from the persisted index
+    (``read_token_index``): exactly the four materialized stats
+    ``_bm25_score`` consumes."""
 
     tf: DataFrame      # (doc_id, token, tf)
     dl: DataFrame      # (doc_id, dl)
     dft: DataFrame     # (token, doc_freq)
     stats: DataFrame   # 1 row: (n_docs, total_tokens)
 
+    def families(self) -> list[tuple[str, DataFrame]]:
+        """The persisted families in WRITE ORDER: dl first (its write
+        materializes a built index's lazy tf checkpoint) and tf last —
+        the commit point ``read_token_index`` keys versions off."""
+        return [
+            ("dl", self.dl), ("df", self.dft), ("stats", self.stats),
+            ("tf", self.tf),
+        ]
 
-def _token_index_frames(
-    batch: DataFrame, text_col: str, id_col: str
-) -> list[tuple[str, DataFrame]]:
-    """One batch's index stats in FAMILY WRITE ORDER (tf last — the
-    commit point ``read_token_index`` keys versions off)."""
-    tok = batch.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(tokens(F.col(text_col))).alias("token"),
+
+def _token_index(
+    df: DataFrame,
+    text_col: str,
+    id_col: str,
+    tokens_col: str | None = None,
+) -> TokenIndex:
+    """The four index stats of ``df`` from ONE token scan + one
+    (doc, token) shuffle. ``tokens_col``: optional pre-tokenized array
+    column (exactly tokens(text)); value-identical.
+
+    tf MATERIALIZES (lazy local checkpoint — computed on first action,
+    then shared), and dl / df / total_tokens all derive from it by
+    value-identical aggregation (dl = Σ tf per doc = the raw token
+    count; total = Σ tf overall). tf is consumed four times in the
+    BM25 scoring plan and by all four family writes; unmaterialized,
+    Spark re-ran the tokenize+explode+groupBy pipeline per consumer
+    (r15 measured: 4.6 s -> 2.x s at sf0.1, 44-Exchange plan
+    collapses). This is also the honest 100 TB shape: the
+    materialized tf IS the inverted index a deployment persists
+    (build_token_index); only n_docs needs the corpus (tokenless docs
+    never join tf but still count in idf)."""
+    doc_toks = (
+        F.col(tokens_col) if tokens_col else tokens(F.col(text_col))
     )
-    # one token scan for all four families: tf materializes (lazily —
-    # at the first family write) and dl / df / total_tokens derive
-    # from it by value-identical aggregation (the bm25_topk r15
-    # restructure); without it each of the four write jobs re-ran the
-    # tokenize+explode pipeline
+    tok = df.select(
+        F.col(id_col).alias("doc_id"),
+        F.posexplode(doc_toks).alias("pos", "token"),
+    )
     tf = (
         tok.groupBy("doc_id", "token")
         .agg(F.count(F.lit(1)).alias("tf"))
         .localCheckpoint(eager=False)
     )
-    dl = tf.groupBy("doc_id").agg(F.sum("tf").alias("dl"))
-    dft = tf.groupBy("token").agg(F.count(F.lit(1)).alias("doc_freq"))
-    stats = batch.agg(
-        F.countDistinct(id_col).alias("n_docs")
-    ).crossJoin(
-        tf.agg(
-            F.coalesce(F.sum("tf"), F.lit(0).cast("long")).alias(
-                "total_tokens"
+    return TokenIndex(
+        tf=tf,
+        dl=tf.groupBy("doc_id").agg(F.sum("tf").alias("dl")),
+        dft=tf.groupBy("token").agg(F.count(F.lit(1)).alias("doc_freq")),
+        stats=df.agg(F.countDistinct(id_col).alias("n_docs")).crossJoin(
+            tf.agg(
+                F.coalesce(F.sum("tf"), F.lit(0).cast("long")).alias(
+                    "total_tokens"
+                )
             )
-        )
+        ),
     )
-    return [("dl", dl), ("df", dft), ("stats", stats), ("tf", tf)]
 
 
 def build_token_index(
@@ -1875,18 +1863,16 @@ def build_token_index(
     rescan ever (``append_token_index_delta``)."""
     from tweetaggregates_spark import versioned_store as vs
 
-    # overlap_after_first (r16, guide §2.6): dl's temp write
-    # materializes the shared lazy tf checkpoint alone, then the
-    # df/stats/tf temps run as overlapped jobs over it; the rename
-    # commit order (tf_base last) is unchanged.
+    # dl's temp write materializes the shared lazy tf checkpoint
+    # alone, then the df/stats/tf temps overlap as jobs over it; the
+    # rename commit order (tf_base last) is unchanged.
     vs.commit_bases(
         path,
         [
             (f"{sub}_base", frame)
-            for sub, frame in _token_index_frames(df, text_col, id_col)
+            for sub, frame in _token_index(df, text_col, id_col).families()
         ],
         0,
-        overlap_after_first=True,
     )
 
 
@@ -1905,28 +1891,22 @@ def append_token_index_delta(
     overwrite + tf-written-last make a replayed ingest idempotent:
     a crash mid-append leaves no tf/v=<id>, so readers ignore the
     orphan families and the retry overwrites them."""
-    frames = _token_index_frames(batch, text_col, id_col)
+    frames = _token_index(batch, text_col, id_col).families()
 
     def _w(sub: str, frame) -> None:
         frame.write.mode("overwrite").parquet(
             f"{path}/{sub}/v={int(ingest_id)}"
         )
 
-    # r16 (guide §2.6): dl writes first and alone (materializing the
-    # shared lazy tf checkpoint), df/stats then overlap, and tf still
-    # writes strictly LAST — it is the commit point readers key
-    # versions off, so crash-idempotence is unchanged.
+    # dl writes first and alone (materializing the shared lazy tf
+    # checkpoint), df/stats then overlap, and tf still writes strictly
+    # LAST — it is the commit point readers key versions off, so
+    # crash-idempotence is unchanged.
     _w(*frames[0])
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark import inheritable_thread_target
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        for f in [
-            pool.submit(inheritable_thread_target(_w), sub, frame)
-            for sub, frame in frames[1:-1]
-        ]:
-            f.result()
+    run_concurrently(
+        batch.sparkSession,
+        [functools.partial(_w, sub, frame) for sub, frame in frames[1:-1]],
+    )
     _w(*frames[-1])
 
 
@@ -1990,18 +1970,12 @@ def compact_token_index(
         return
     idx = read_token_index(spark, path, below)
     newv = max(deltas)
+    # each frame folds its OWN persisted family (no shared lazy
+    # checkpoint), so the post-first temps overlap safely
     vs.commit_bases(
         path,
-        [
-            ("dl_base", idx.dl),
-            ("df_base", idx.dft),
-            ("stats_base", idx.stats),
-            ("tf_base", idx.tf),
-        ],
+        [(f"{sub}_base", frame) for sub, frame in idx.families()],
         newv,
-        # each frame folds its OWN persisted family (no shared lazy
-        # checkpoint), so the post-first temps overlap safely (r16)
-        overlap_after_first=True,
     )
     vs.cleanup_after_compact(
         path,
@@ -2028,7 +2002,7 @@ def bm25_topk_indexed(
     expression (``_bm25_score``), so indexed and scan-per-call results
     are bit-equal over the same corpus."""
     return _bm25_score(
-        index.tf, index.dl, index.dft, index.stats, queries,
+        index, queries,
         query_id_col=query_id_col, query_text_col=query_text_col,
         n_query_terms=n_query_terms, k=k, k1=k1, b=b,
     )

@@ -84,11 +84,6 @@ def dedupe_array_keep_first(
     )
 
 
-def recent_n(df: DataFrame, time_col: str, n: int) -> DataFrame:
-    """D4: newest-N reverse scan (RocksDBStore.cs:213-232)."""
-    return df.orderBy(F.desc(time_col)).limit(n)
-
-
 def rank_topk_local_global(
     df: DataFrame,
     partition_cols: Sequence[str],

@@ -10,7 +10,10 @@ dims broadcast instead of shuffling the fact table.
 from __future__ import annotations
 
 import os
+from collections.abc import Callable, Sequence
+from concurrent.futures import ThreadPoolExecutor
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import SparkSession
 
 
@@ -52,3 +55,41 @@ def get_spark(
         .config("spark.ui.enabled", "false")
     )
     return builder.getOrCreate()
+
+
+def run_concurrently(
+    spark: SparkSession, writes: Sequence[Callable[[], object]]
+) -> None:
+    """Run independent Spark writes together and wait for all of them.
+
+    The one rule for overlapping writes: Spark's scheduler interleaves
+    jobs submitted from several threads, so the caller pays the slowest
+    write instead of the sum. Callers order their own writes (what must
+    run first or last alone) and pass only writes that share no
+    unmaterialized lazy checkpoint — two threads materializing the same
+    one would each recompute its lineage.
+
+    A single write runs on the calling thread. Otherwise the writes run
+    on a pool of at most five threads (the widest fan-out any caller
+    has: the pipeline's five store families), each wrapped in
+    ``inheritable_thread_target(spark)``: the pool threads carry the
+    caller's job group, description and session tags, so jobs started
+    inside a streaming trigger belong to that query (its ``stop()``
+    cancels them, and monitoring attributes them). Every write is
+    joined before the first error is re-raised: a failed write does not
+    cancel its siblings, which is safe because every caller writes to
+    per-version, per-batch or per-build directories that a retry
+    rewrites."""
+    if len(writes) <= 1:
+        for w in writes:
+            w()
+        return
+    # wrapped per write: each thread gets its own copy of the caller's
+    # local properties, so a write that sets its own job group does not
+    # relabel its siblings' jobs
+    with ThreadPoolExecutor(min(len(writes), 5)) as pool:
+        futures = [
+            pool.submit(inheritable_thread_target(spark)(w)) for w in writes
+        ]
+    for f in futures:
+        f.result()

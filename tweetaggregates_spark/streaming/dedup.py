@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from tweetaggregates_spark.session import run_concurrently
 from tweetaggregates_spark.streaming.joins import EVENT_SCHEMA
 
 
@@ -145,7 +146,7 @@ def run_streaming_near_dedup(
                     f"{out_path}_quarantine/batch_id={batch_id}"
                 )
 
-        _run_write_branches(pool_size=2, branches=(_w_index, _w_out))
+        run_concurrently(spark, [_w_index, _w_out])
 
     from tweetaggregates_spark.streaming.runner import run_foreach_batch
 
@@ -153,30 +154,6 @@ def run_streaming_near_dedup(
         spark, in_dir, DOC_SCHEMA, _process, checkpoint,
         available_now, max_files_per_trigger,
     )
-
-
-def _run_write_branches(pool_size: int, branches) -> None:
-    """Run the per-trigger write branches on a small pool (guide
-    §2.6). Each branch is wrapped in ``inheritable_thread_target`` so
-    that, under PySpark pinned-thread mode, the worker inherits the
-    parent's JVM thread-local properties — streaming job group/tags —
-    and ``StreamingQuery.stop()`` can cancel in-flight branch writes
-    and the UI attributes them to the query (ADVICE r15). Failure
-    semantics (ADVICE r15, noted trade): when one branch raises, the
-    sibling write is NOT cancelled — the pool joins it before the
-    trigger fails. Results stay correct (every write is a
-    per-version/batch-dir overwrite, so replay overwrites both
-    outputs); the only cost is a delayed failure, and cancelling a
-    running Spark job mid-write buys nothing safer."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark import inheritable_thread_target
-
-    with ThreadPoolExecutor(max_workers=pool_size) as pool:
-        for f in [
-            pool.submit(inheritable_thread_target(w)) for w in branches
-        ]:
-            f.result()
 
 
 # -- streaming EXACT-dup ingest over a versioned hash index + bloom ----------
@@ -279,7 +256,7 @@ def run_streaming_exact_dedup(
                 f"{out_path}/batch_id={batch_id}"
             )
 
-        _run_write_branches(pool_size=2, branches=(_w_index, _w_out))
+        run_concurrently(spark, [_w_index, _w_out])
 
     from tweetaggregates_spark.streaming.runner import run_foreach_batch
 
@@ -530,7 +507,7 @@ def run_streaming_split_routing(
                 f"{out_path}/batch_id={batch_id}"
             )
 
-        _run_write_branches(pool_size=2, branches=(_w_index, _w_routing))
+        run_concurrently(spark, [_w_index, _w_routing])
 
     from tweetaggregates_spark.streaming.runner import run_foreach_batch
 

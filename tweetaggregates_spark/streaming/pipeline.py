@@ -56,6 +56,7 @@ hold, but spillable and executor-count independent.
 from __future__ import annotations
 
 import datetime
+import functools
 import json
 import os
 import shutil
@@ -68,6 +69,7 @@ from tweetaggregates_spark.plans.tweets import (
     parse_tweets,
     tweet_aggregates,
 )
+from tweetaggregates_spark.session import run_concurrently
 from tweetaggregates_spark.store import AggregateStore
 
 DISORDER_TOLERANCE_SECONDS = 5  # Query.cs:14 DisOrderTicks
@@ -239,23 +241,15 @@ def run_streaming_aggregates(
             # the five family writes are independent jobs over the same
             # cached batch — submit concurrently so wall time is the
             # slowest family, not the sum (Spark's scheduler interleaves)
-            from concurrent.futures import ThreadPoolExecutor
-
-            to_write = [
-                (family, df)
-                for family, df in families_from_stage1(stage1_batch).items()
-                if gate[family]
-            ]
-            if to_write:
-                with ThreadPoolExecutor(len(to_write)) as pool:
-                    list(
-                        pool.map(
-                            lambda fd: store.write_batch(
-                                fd[0], fd[1], batch_id
-                            ),
-                            to_write,
-                        )
-                    )
+            families = families_from_stage1(stage1_batch)
+            run_concurrently(
+                spark,
+                [
+                    functools.partial(store.write_batch, family, df, batch_id)
+                    for family, df in families.items()
+                    if gate[family]
+                ],
+            )
             _commit(commits_dir, batch_id, None)
         finally:
             stage1_batch.unpersist()

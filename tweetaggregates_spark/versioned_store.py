@@ -30,7 +30,10 @@ The contract, shared verbatim by every family:
   that are unreadable (no matching final-family base) and are swept
   by the retry before re-renaming (``os.rename`` cannot replace a
   non-empty dir — without the sweep an inline-at-trigger-start
-  compaction would wedge its stream on every retry).
+  compaction would wedge its stream on every retry). The first temp
+  writes alone and the rest overlap, so a caller committing more
+  than two families must not let them share unmaterialized lineage
+  beyond what the first family's write materializes.
 * **cleanup**: folded deltas (v <= newv) and superseded bases
   (v < newv) are removed only AFTER the commit point.
 
@@ -41,11 +44,14 @@ manifest write — same pattern as the aggregate store's swap in
 
 from __future__ import annotations
 
+import functools
 import os
 import re
 import shutil
 
 from pyspark.sql import DataFrame, SparkSession
+
+from tweetaggregates_spark.session import run_concurrently
 
 _VERSION_RE = re.compile(r"v=(\d+)")
 
@@ -126,7 +132,6 @@ def commit_bases(
     frames: list[tuple[str, DataFrame]],
     newv: int,
     allow_replace: bool = False,
-    overlap_after_first: bool = False,
 ) -> None:
     """Atomically commit ``frames`` — ``(base_sub, df)`` in COMMIT
     ORDER, the last being the commit point readers key off — as base
@@ -139,46 +144,36 @@ def commit_bases(
     name guarantee for in-place replacement, so callers should skip
     the commit entirely when the fold is a no-op.
 
-    ``overlap_after_first`` (r16, guide §2.6): materialize the FIRST
-    frame's temp dir serially, then the remaining temps from a small
-    thread pool — the renames below stay strictly serial in commit
-    order, so crash-safety is unchanged (the commit point is the LAST
-    rename, never a temp write). Only safe when the caller's frames
-    share no UNMATERIALIZED lazy checkpoint beyond one the first
-    frame materializes (the token-index families: dl's write
-    materializes the shared tf checkpoint, then df/stats/tf are
-    independent jobs over it); default off — several callers' frames
-    have not been audited for that race."""
+    The FIRST frame's temp writes alone; the remaining temps then
+    overlap through ``session.run_concurrently``. The renames stay
+    strictly serial in commit order, so crash-safety is unchanged (the
+    commit point is the LAST rename, never a temp write). With more
+    than two frames, the frames after the first must share no
+    UNMATERIALIZED lazy checkpoint beyond one the first frame's write
+    materializes — otherwise concurrent temp writes recompute it (the
+    token index: dl's write materializes the shared tf checkpoint,
+    then df/stats/tf are independent jobs over it). With two frames
+    the second write runs alone, so the temps are written serially."""
 
-    def _write_tmp(sub: str, df) -> tuple[str, str]:
-        tmp = f"{root}/.compact_{sub}_tmp"
-        shutil.rmtree(tmp, ignore_errors=True)
-        df.write.mode("overwrite").parquet(tmp)
+    def _tmp(sub: str) -> str:
+        return f"{root}/.compact_{sub}_tmp"
+
+    def _write_tmp(sub: str, df: DataFrame) -> None:
+        shutil.rmtree(_tmp(sub), ignore_errors=True)
+        df.write.mode("overwrite").parquet(_tmp(sub))
         os.makedirs(f"{root}/{sub}", exist_ok=True)
-        return (sub, tmp)
 
-    if overlap_after_first and len(frames) > 2:
-        from concurrent.futures import ThreadPoolExecutor
-
-        from pyspark import inheritable_thread_target
-
-        tmps = [_write_tmp(*frames[0])]
-        rest = frames[1:]
-        with ThreadPoolExecutor(max_workers=len(rest)) as pool:
-            futs = [
-                pool.submit(
-                    inheritable_thread_target(_write_tmp), sub, df
-                )
-                for sub, df in rest
-            ]
-            tmps.extend(f.result() for f in futs)
-    else:
-        tmps = [_write_tmp(sub, df) for sub, df in frames]
-    for i, (sub, tmp) in enumerate(tmps):
+    (first_sub, first_df), rest = frames[0], frames[1:]
+    _write_tmp(first_sub, first_df)
+    run_concurrently(
+        first_df.sparkSession,
+        [functools.partial(_write_tmp, sub, df) for sub, df in rest],
+    )
+    for i, (sub, _) in enumerate(frames):
         target = f"{root}/{sub}/v={newv}"
-        if i < len(tmps) - 1 or allow_replace:
+        if i < len(frames) - 1 or allow_replace:
             shutil.rmtree(target, ignore_errors=True)
-        os.rename(tmp, target)
+        os.rename(_tmp(sub), target)
 
 
 def cleanup_after_compact(
