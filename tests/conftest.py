@@ -5,7 +5,7 @@ import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 # DRIVER_FAST (VERDICT r15 #7): the full suite is ~30 min wall, which
 # overflows a time-boxed CI/driver window (VERIFY r15 recorded a run

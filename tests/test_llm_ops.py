@@ -326,14 +326,12 @@ def test_lsh_capped_quarantines_giant_cluster(spark, docs):
     assert all(len(r.example_doc_ids) == 10 for r in q_rows)
     # uncapped baseline on the same corpus would include ~1000^2/2 clone
     # pairs; capped output must stay near the normal-data pair count
-    normal_pairs = dedup.minhash_lsh_pairs(docs).count()
-    assert n_pairs <= normal_pairs + 1000
+    normal = dedup.minhash_lsh_pairs(docs).collect()
+    assert n_pairs <= len(normal) + 1000
     # normal near-dups still found: capped == uncapped on clean data
     p2, q2 = dedup.minhash_lsh_pairs_capped(docs, max_bucket_size=100)
     assert q2.isEmpty()
-    assert {tuple(r) for r in p2.collect()} == {
-        tuple(r) for r in dedup.minhash_lsh_pairs(docs).collect()
-    }
+    assert {tuple(r) for r in p2.collect()} == {tuple(r) for r in normal}
 
 
 def test_ngram_jaccard_doc_freq_cap(spark, docs):

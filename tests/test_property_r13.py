@@ -117,14 +117,28 @@ def _bm25_reference(corpus, queries, k1=1.2, b=0.75, n_terms=8):
     return out
 
 
+def _rand_queries(rng):
+    """Random 6-token queries plus the query-term edge cases: a
+    repeated token, more than 8 distinct tokens with a repeat before
+    the cut, and queries with no tokens at all."""
+    texts = [" ".join(rng.choice(VOCAB) for _ in range(6)) for _ in range(3)]
+    few = [rng.choice(VOCAB) for _ in range(4)]
+    texts.append(" ".join(few + few[:2]))
+    many = rng.sample(VOCAB, 12)
+    many.insert(5, many[1])
+    texts.append(" ".join(many))
+    texts += ["", " ,, !! "]
+    return [(100 + j, t) for j, t in enumerate(texts)]
+
+
 def test_bm25_scores_match_reference_random(spark):
     for seed in (3, 11):
         rng = random.Random(seed)
         corpus = _rand_corpus(rng, n=25)
-        queries = [
-            (100 + j, " ".join(rng.choice(VOCAB) for _ in range(6)))
-            for j in range(3)
-        ]
+        queries = _rand_queries(rng)
+        n_distinct = [len(set(_toks(t))) for _, t in queries]
+        assert any(len(_toks(t)) > len(set(_toks(t))) for _, t in queries)
+        assert max(n_distinct) > 8 and min(n_distinct) == 0
         docs = spark.createDataFrame(corpus, "doc_id LONG, text STRING")
         qdf = spark.createDataFrame(queries, "query_id LONG, text STRING")
         got = text.bm25_topk(docs, qdf, k=1000).collect()

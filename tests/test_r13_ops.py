@@ -171,6 +171,25 @@ def test_bm25_idf_downweights_stopwords(spark):
     assert top.doc_id == 1
 
 
+def test_bm25_identical_docs_tie_bit_equal_ranked_by_doc_id(spark):
+    """Two identical documents score bit-equal (exact integer score
+    sums), and the tie ranks them by doc_id."""
+    rows = [
+        (7, "apple banana cherry"),
+        (3, "apple banana cherry"),
+        (5, "banana split sundae"),
+        (9, "grape melon plum"),
+    ]
+    docs = spark.createDataFrame(rows, "doc_id LONG, text STRING")
+    queries = spark.createDataFrame(
+        [(100, "cherry banana apple")], "query_id LONG, text STRING"
+    )
+    out = {r.doc_id: r for r in text.bm25_topk(docs, queries, k=4).collect()}
+    assert out[3].bm25 == out[7].bm25
+    assert (out[3].rank, out[7].rank) == (1, 2)
+    assert out[5].bm25 < out[3].bm25 and out[5].rank == 3
+
+
 # -- IVF-PQ tombstones -------------------------------------------------------
 
 

@@ -5,6 +5,8 @@ family carries."""
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import functions as F
 
 from tweetaggregates_spark.operators import text
@@ -35,11 +37,25 @@ def _rows(df):
     return sorted(map(tuple, df.collect()))
 
 
+def _plan(df) -> str:
+    """The executed plan before any stage runs (AQE's initial plan)."""
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _n_shuffles(df) -> int:
+    # a bare ``Exchange`` node; BroadcastExchange / ReusedExchange are
+    # not shuffles
+    return len(re.findall(r"(?<![A-Za-z])Exchange ", _plan(df)))
+
+
 def test_two_batch_ingest_equals_one_shot(spark, tmp_path):
     """Batching invariance: build(evens) + append(odds) + compact
     reads back stats identical to a one-shot build over everything —
     and the indexed scorer is bit-equal to the scan-per-call scorer
-    over the full corpus."""
+    over the full corpus. A probe over the compacted index shuffles
+    only for the (query, doc) score sum and the top-k window: query
+    terms are cut per query row, and the one-part df/stats fold is
+    read as stored."""
     docs = _corpus(spark)
     root = str(tmp_path / "tok")
     text.build_token_index(docs.filter(F.col("doc_id") % 2 == 0), root)
@@ -60,7 +76,9 @@ def test_two_batch_ingest_equals_one_shot(spark, tmp_path):
     assert _rows(text.bm25_topk_indexed(idx, q, k=5)) == direct
     text.compact_token_index(spark, root)
     folded = text.read_token_index(spark, root)
-    assert _rows(text.bm25_topk_indexed(folded, q, k=5)) == direct
+    probe = text.bm25_topk_indexed(folded, q, k=5)
+    assert _n_shuffles(probe) == 2, _plan(probe)
+    assert _rows(probe) == direct
 
 
 def test_compact_rebases_families(spark, tmp_path):
@@ -100,3 +118,20 @@ def test_below_read_hides_later_ingests(spark, tmp_path):
     # replayed ingest: same version, same rows — idempotent
     text.append_token_index_delta(b2, root, ingest_id=1)
     assert _rows(text.read_token_index(spark, root).stats) == full
+
+
+def test_lone_delta_equals_one_shot_build(spark, tmp_path):
+    """An append into an empty root (no base) reads back equal to a
+    one-shot build of the same docs. Both are one-part folds, so their
+    df and stats frames are plain scans of what was written."""
+    docs = _corpus(spark)
+    root = str(tmp_path / "tok")
+    text.append_token_index_delta(docs, root, ingest_id=1)
+    idx = text.read_token_index(spark, root)
+    oneshot_root = str(tmp_path / "tok1")
+    text.build_token_index(docs, oneshot_root)
+    one = text.read_token_index(spark, oneshot_root)
+    for fam in ("tf", "dl", "dft", "stats"):
+        assert _rows(getattr(idx, fam)) == _rows(getattr(one, fam)), fam
+    for frame in (idx.dft, idx.stats, one.dft, one.stats):
+        assert "Exchange" not in _plan(frame), _plan(frame)

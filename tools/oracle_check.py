@@ -12,9 +12,10 @@ Usage: python tools/oracle_check.py [query ...] [--sf /root/testdata/sf0.01]
 from __future__ import annotations
 
 import math
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
 

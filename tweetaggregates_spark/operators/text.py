@@ -693,21 +693,23 @@ def bm25_topk(
         w(t,d) = idf(t) * tf * (k1+1) / (tf + k1*(1 - b + b*dl/avgdl))
 
     Query terms are the first ``n_query_terms`` DISTINCT tokens of the
-    query text in first-occurrence order (ties by token) — a
-    deterministic, engine-portable cut. Determinism: per-term scores
-    round to 9 dp (absorbs ln() ulp noise) and sum through
-    DECIMAL(28,12) so ranking compares exact decimals; ties break by
-    doc_id. Output: (query_id, doc_id, bm25 rounded 6, rank).
+    query text in first-occurrence order — a deterministic,
+    engine-portable cut; query ids must be keys. Determinism: per-term
+    scores round to 9 dp (absorbs ln() ulp noise), i.e. whole
+    nano-units, and sum as LONG nano-units — exact and
+    order-independent — so ranking compares exact sums and sum / 1e9
+    is the correctly rounded double; ties break by doc_id. Output:
+    (query_id, doc_id, bm25 rounded 6, rank).
 
     Scale shape: ONE token scan of the corpus feeds tf (doc,token
     groupBy), dl (doc groupBy) and df (token groupBy on tf's
     exchange); N and total-token count are a 1-row aggregate crossed
     in as a literal; the query-term table (|Q| x n_query_terms rows)
-    BROADCASTS onto tf, so the corpus never shuffles for the join —
-    the only corpus-sized exchanges are the two index-build groupBys
-    a real system would persist (see inverted_index /
-    build_token_index). Final top-k is a per-query window over
-    |Q| x matched-docs rows."""
+    is cut per query row with no shuffle and BROADCASTS onto tf, so
+    the corpus never shuffles for the join — the only corpus-sized
+    exchanges are the two index-build groupBys a real system would
+    persist (see inverted_index / build_token_index). Final top-k is
+    a per-query window over |Q| x matched-docs rows."""
     # tokens_col / query_tokens_col: optional pre-tokenized array
     # columns (exactly tokens(text)) so a composed pipeline shares
     # one tokenize pass (dataset_card_v2_docs); value-identical.
@@ -733,7 +735,8 @@ def _bm25_score(
     """The BM25 scoring plan over MATERIALIZED index stats — shared by
     the scan-per-call ``bm25_topk`` and the persisted-index
     ``bm25_topk_indexed``. ``query_tokens_col``: optional
-    pre-tokenized query array column (see ``bm25_topk``)."""
+    pre-tokenized query array column (see ``bm25_topk``). Query ids
+    must be keys: each query row's terms are cut on that row alone."""
     from pyspark.sql import Window
 
     q_toks = (
@@ -741,17 +744,10 @@ def _bm25_score(
         if query_tokens_col
         else tokens(F.col(query_text_col))
     )
-    qtok = queries.select(
+    # array_distinct keeps first occurrences, in order
+    qterms = queries.select(
         F.col(query_id_col).alias("query_id"),
-        F.posexplode(q_toks).alias("pos", "token"),
-    )
-    qw = Window.partitionBy("query_id").orderBy("fp", "token")
-    qterms = (
-        qtok.groupBy("query_id", "token")
-        .agg(F.min("pos").alias("fp"))
-        .withColumn("qr", F.row_number().over(qw))
-        .filter(F.col("qr") <= n_query_terms)
-        .select("query_id", "token")
+        F.explode(F.slice(F.array_distinct(q_toks), 1, n_query_terms)).alias("token"),
     )
     # identical association to the DuckDB twin: IEEE mul/div are
     # deterministic given identical inputs, ln() is the only libm
@@ -780,7 +776,7 @@ def _bm25_score(
         .select("query_id", "doc_id", w_term.alias("w"))
     )
     agg = scored.groupBy("query_id", "doc_id").agg(
-        F.sum(F.col("w").cast("decimal(28,12)")).alias("sd")
+        F.sum(F.round(F.col("w") * F.lit(1e9)).cast("long")).alias("sd")
     )
     rw = Window.partitionBy("query_id").orderBy(
         F.desc("sd"), F.asc("doc_id")
@@ -791,7 +787,7 @@ def _bm25_score(
         .select(
             "query_id",
             "doc_id",
-            F.round(F.col("sd").cast("double"), 6).alias("bm25"),
+            F.round(F.col("sd") / F.lit(1e9), 6).alias("bm25"),
             "rank",
         )
     )
@@ -1917,13 +1913,17 @@ def read_token_index(
     df folds by per-token SUM and stats by 1-row SUM — the additive
     increments that make the fold equal a from-scratch build over
     everything ingested (batching invariance, pinned in
-    tests/test_token_index.py). ``below=N`` restricts to versions < N
-    (the streaming replay contract). The tf family is authoritative
-    for version selection; the other three read at ITS versions, so a
-    crash between family writes can never produce a skewed fold."""
+    tests/test_token_index.py). A ONE-part fold (fresh or compacted
+    base, or a lone delta) skips both sums: every df part already
+    holds one row per token and every stats part one row. ``below=N``
+    restricts to versions < N (the streaming replay contract). The tf
+    family is authoritative for version selection; the other three
+    read at ITS versions, so a crash between family writes can never
+    produce a skewed fold."""
     from tweetaggregates_spark import versioned_store as vs
 
     b, deltas = vs.base_and_deltas(path, "tf_base", "tf", below)
+    one_part = (b is not None) + len(deltas) == 1
 
     def _fold(sub: str, schema: str) -> DataFrame:
         parts = vs.read_family(
@@ -1934,15 +1934,14 @@ def read_token_index(
             return spark.createDataFrame([], schema)
         return out
 
-    dft = (
-        _fold("df", "token STRING, doc_freq BIGINT")
-        .groupBy("token")
-        .agg(F.sum("doc_freq").alias("doc_freq"))
-    )
-    stats = _fold("stats", "n_docs BIGINT, total_tokens BIGINT").agg(
-        F.sum("n_docs").alias("n_docs"),
-        F.sum("total_tokens").alias("total_tokens"),
-    )
+    dft = _fold("df", "token STRING, doc_freq BIGINT")
+    stats = _fold("stats", "n_docs BIGINT, total_tokens BIGINT")
+    if not one_part:
+        dft = dft.groupBy("token").agg(F.sum("doc_freq").alias("doc_freq"))
+        stats = stats.agg(
+            F.sum("n_docs").alias("n_docs"),
+            F.sum("total_tokens").alias("total_tokens"),
+        )
     return TokenIndex(
         tf=_fold("tf", "doc_id BIGINT, token STRING, tf BIGINT"),
         dl=_fold("dl", "doc_id BIGINT, dl BIGINT"),
@@ -2000,7 +1999,7 @@ def bm25_topk_indexed(
     access; the only work is the broadcast query-term join onto the
     stored postings and the per-query top-k window. Identical scoring
     expression (``_bm25_score``), so indexed and scan-per-call results
-    are bit-equal over the same corpus."""
+    are bit-equal over the same corpus; query ids must be keys."""
     return _bm25_score(
         index, queries,
         query_id_col=query_id_col, query_text_col=query_text_col,

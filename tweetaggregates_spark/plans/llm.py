@@ -2594,10 +2594,10 @@ def dataset_card_v2_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     all four aggregate families (1 scan + 1 tokenize instead of ~5)
     via the operators' ``tokens_col`` hooks, value-identical (every
     consumer derives the same ``tokens(text)`` expression it computed
-    itself before; oracle re-verified). The text payload itself stays
-    OUT of the checkpoint (guide §5/§8: materialize keys + metadata,
-    not payloads — no downstream consumer needs raw text once the
-    stats and tokens are folded in). The checkpoint is LAZY: its
+    itself before; oracle re-verified). The raw text column stays out
+    of the checkpoint, but the ``_toks`` array it does hold is about
+    text-sized, so the checkpoint's footprint is corpus-scale, not a
+    keys-and-metadata layer. The checkpoint is LAZY: its
     first consumer is the CC labels init inside assign_clusters,
     which runs ALONE at plan-construction time (the r15 eager/lazy
     rule — lazy is safe when the first consumer is single-sided)."""
