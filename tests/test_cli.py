@@ -95,3 +95,36 @@ def test_send_to_event_hub_file_sink(spark, tmp_path, capsys):
     cli.send_to_event_hub(str(src), sink_dir)
     assert "sent frames" in capsys.readouterr().out
     assert spark.read.parquet(sink_dir).count() >= 1
+
+
+def test_repl_over_young_stream_store(spark, tmp_path, capsys, monkeypatch):
+    """A young stream has written hopping counts but closed no tumbling
+    window yet, so ``counts/`` and the entity families do not exist: the
+    REPL answers from empty families instead of failing on the path."""
+    import datetime
+    import json
+
+    from tweetaggregates_spark.schema import FAMILY_SCHEMAS
+
+    store_dir = str(tmp_path / "store")
+    t = datetime.datetime(2024, 1, 1, 0, 1)
+    hops = spark.createDataFrame([(t, 3)], FAMILY_SCHEMAS["hopping_counts"])
+    AggregateStore(spark, store_dir).write_batch("hopping_counts", hops, 0)
+    capsys.readouterr()
+    _run_repl(
+        monkeypatch,
+        store_dir,
+        [
+            "getsummary",
+            "getcounts 2024-01-01T00:00:00 2024-01-02T00:00:00",
+            "gettopmentionsstring 2024-01-01T00:00:00 2024-01-02T00:00:00",
+            "getrecentcountsstring 3",
+            "getrecenthoppingcountsstring 3",
+            "exit",
+        ],
+    )
+    out = capsys.readouterr().out
+    assert "error:" not in out
+    rows = [json.loads(ln) for ln in out.splitlines() if ln.startswith("{")]
+    assert rows[0]["window_count"] == 0
+    assert rows[1:] == [{"window_time": str(t), "cnt": 3}]

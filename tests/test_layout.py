@@ -133,20 +133,23 @@ def test_store_zorder_layout_skips_on_entity_and_time(spark, tmp_path):
     (RocksDBStore.cs:18-21)."""
     import datetime
 
+    from tweetaggregates_spark.schema import FAMILY_SCHEMAS
     from tweetaggregates_spark.store import AggregateStore
 
     base = datetime.datetime(2024, 1, 1)
-    rows = [
-        (
-            base + datetime.timedelta(minutes=(i * 7) % (2 * 24 * 60)),
-            f"user_{(i * 37) % 1000:04d}",
-            i % 50,
+    rows = []
+    for i in range(4000):
+        name = f"user_{(i * 37) % 1000:04d}"
+        rows.append(
+            (
+                base + datetime.timedelta(minutes=(i * 7) % (2 * 24 * 60)),
+                name,
+                i % 50,
+                i % 50 * 10,
+                [(i, i % 50, f"tweet {i}", name, -1)],
+            )
         )
-        for i in range(4000)
-    ]
-    df = spark.createDataFrame(
-        rows, "window_time timestamp, screen_name string, cnt long"
-    )
+    df = spark.createDataFrame(rows, FAMILY_SCHEMAS["mentions"])
     st = AggregateStore(spark, str(tmp_path / "agg"))
     st.write("mentions", df, files_per_day=8)
 
@@ -221,6 +224,7 @@ def test_store_zorder_numeric_entity_family(spark, tmp_path):
     row-preserving, entity-skipping layout."""
     import datetime
 
+    from tweetaggregates_spark.schema import FAMILY_SCHEMAS
     from tweetaggregates_spark.store import AggregateStore
 
     base = datetime.datetime(2024, 3, 1)
@@ -228,13 +232,14 @@ def test_store_zorder_numeric_entity_family(spark, tmp_path):
         (
             base + datetime.timedelta(minutes=i % 1440),
             (i * 131) % 100000,
+            f"tweet {i}",
             i % 20,
+            i % 20 * 10,
+            [f"user_{i % 7}"],
         )
         for i in range(3000)
     ]
-    df = spark.createDataFrame(
-        rows, "window_time timestamp, id long, cnt long"
-    )
+    df = spark.createDataFrame(rows, FAMILY_SCHEMAS["retweets"])
     st = AggregateStore(spark, str(tmp_path / "agg"))
     st.write("retweets", df, files_per_day=16)
     files = glob.glob(f"{st.root}/retweets/window_date=*/part-*.parquet")

@@ -2,12 +2,17 @@
 
 from __future__ import annotations
 
+import collections
+import datetime
+
 import pytest
 from pyspark.sql import functions as F
 
 from tests.fixtures import make_tweets
+from tweetaggregates_spark import cli
 from tweetaggregates_spark.plans import tweets as tp
-from tweetaggregates_spark.store import AggregateStore
+from tweetaggregates_spark.schema import FAMILY_SCHEMAS
+from tweetaggregates_spark.store import ENTITY_COL, FAMILIES, AggregateStore
 
 
 @pytest.fixture(scope="module")
@@ -90,3 +95,86 @@ def test_prefix_seek_quirk(store):
     later = {r.window_time for r in got if r.window_time != w0}
     expected_later = {r.window_time for r in m if r.window_time not in (w0, m[-1].window_time)}
     assert expected_later <= later | {m[-1].window_time}
+
+
+def _cols(schema):
+    return [(f.name, f.dataType.simpleString()) for f in schema]
+
+
+def test_declared_schemas_match_both_writers(spark, store, tmp_path):
+    """Both writers persist exactly the declared family schemas, so a
+    read with them (no footer inference) nulls no column: the batch
+    bundle through ``write`` (the module store) and the streaming stage
+    2 through ``write_batch``, compared against the footer schema."""
+    src = tmp_path / "tweets.ndjson"
+    src.write_text("\n".join(make_tweets(300, seed=3)) + "\n")
+    flat = tp.parse_tweets(spark.read.text(str(src)))
+    stage1 = tp.unified_stage1(tp.unified_entity_rows(flat)).persist()
+    streamed = AggregateStore(spark, str(tmp_path / "streamed"))
+    for fam, df in tp.families_from_stage1(stage1).items():
+        streamed.write_batch(fam, df, 0)
+    stage1.unpersist()
+    for st in (store, streamed):
+        for fam in FAMILIES:
+            on_disk = spark.read.parquet(st._path(fam)).drop("window_date", "batch_id")
+            assert _cols(on_disk.schema) == _cols(FAMILY_SCHEMAS[fam]), (st.root, fam)
+            assert _cols(st.read(fam).schema) == _cols(FAMILY_SCHEMAS[fam])
+
+
+def test_write_rejects_undeclared_schema(spark, tmp_path):
+    st = AggregateStore(spark, str(tmp_path / "agg"))
+    renamed = spark.createDataFrame([], FAMILY_SCHEMAS["counts"]).withColumnRenamed(
+        "cnt", "count"
+    )
+    with pytest.raises(ValueError, match="declared"):
+        st.write("counts", renamed)
+    with pytest.raises(ValueError, match="declared"):
+        st.write_batch("hopping_counts", renamed, 0)
+    assert not (tmp_path / "agg").exists()
+
+
+def test_get_top_in_total_key_order(store):
+    """Range answers come back in the reference's ticks‖entity key
+    order, (window_time, entity as string), inside every window too."""
+    for fam in ("mentions", "retweets"):
+        ecol = ENTITY_COL[fam]
+        lo, hi = store.read(fam).agg(F.min("window_time"), F.max("window_time")).first()
+        rows = store.get_top(fam, str(lo), str(hi + datetime.timedelta(minutes=1))).collect()
+        keys = [(r.window_time, str(r[ecol])) for r in rows]
+        assert keys == sorted(keys), fam
+        per_window = collections.Counter(t for t, _ in keys)
+        assert max(per_window.values()) >= 2, fam
+
+
+def test_repl_commands_run_at_most_two_jobs(spark, store, tmp_path):
+    """Building an answer runs no job (no schema inference); emitting it
+    runs at most two (a shuffle map stage and the result), and a recency
+    answer one (a distributed top-k collect)."""
+    sc = spark.sparkContext
+    lo, hi = store.read("mentions").agg(F.min("window_time"), F.max("window_time")).first()
+    start, end = str(lo), str(hi + datetime.timedelta(minutes=1))
+    name = store.read("mentions").first().screen_name
+    commands = {
+        "summary": (store.get_summary, (), 2),
+        "counts": (store.get_counts, (start, end), 2),
+        "top": (store.get_top, ("hashtags", start, end), 2),
+        "top_entity": (store.get_top, ("mentions", start, end, name), 2),
+        "prefix_seek": (store.get_top_prefix_seek, ("mentions", start, end, name), 2),
+        "recent": (store.get_recent, ("retweets", 5), 1),
+    }
+
+    def jobs(group: str) -> int:
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    try:
+        for kind, (meth, args, most) in commands.items():
+            sc.setJobGroup(f"plan-{kind}", kind)
+            df = meth(*args)
+            sc.setJobGroup(f"emit-{kind}", kind)
+            cli._emit(df, str(tmp_path / f"{kind}.jsonl"))
+            assert jobs(f"plan-{kind}") == 0, kind
+            assert 1 <= jobs(f"emit-{kind}") <= most, kind
+    finally:
+        for prop in ("jobGroup.id", "job.description", "job.interruptOnCancel"):
+            sc.setLocalProperty(f"spark.{prop}", None)

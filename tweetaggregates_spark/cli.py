@@ -138,12 +138,14 @@ RECENT_FAMILIES = {
 
 def _emit(df, out_path: str | None) -> None:
     """Result sink (Program.Repl.cs:110-123): console, or `> file`
-    redirection writing the same JSON lines to a file. Rows stream
-    through toLocalIterator so a large range scan never materializes on
-    the driver."""
+    redirection writing the same JSON lines to a file. An answer is
+    collected whole in one round trip: it is one sorted partition of at
+    most NUMBER_OF_AGGREGATES_PER_WINDOW rows per window of its range
+    (14,400 rows for a day of one-minute hops), which the driver JVM
+    holds whole anyway. Export a larger range with ``store.read(family)``
+    and a DataFrame write instead."""
     rows = (
-        json.dumps(r.asDict(recursive=True), default=str)
-        for r in df.toLocalIterator()
+        json.dumps(r.asDict(recursive=True), default=str) for r in df.collect()
     )
     if out_path is None:
         for r in rows:

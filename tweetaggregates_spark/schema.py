@@ -9,7 +9,8 @@ reference relies on (Program.SaveAggregates.cs:73).
 FLAT_TWEET: the canonical internal schema — the reference's first
 projection (Query.cs:32-41) flattened to columns.
 
-Aggregate output schemas mirror AggregatePayloads.cs:5-58.
+FAMILY_SCHEMAS: the aggregate store's five family schemas, mirroring
+AggregatePayloads.cs:5-58.
 """
 
 from __future__ import annotations
@@ -83,22 +84,57 @@ FLAT_TWEET = StructType(
     ]
 )
 
-# TweetDescription (AggregatePayloads.cs:5-13) — elements of top_tweets.
-TWEET_DESCRIPTION = StructType(
+# TweetDescription (AggregatePayloads.cs:5-13), one top_tweets element, in
+# the field order the writers emit (plans.tweets._dedupe_and_shape).
+_TOP_TWEET = StructType(
     [
-        StructField("follower_count", LongType()),
         StructField("id", LongType()),
+        StructField("follower_count", LongType()),
         StructField("text", StringType()),
         StructField("screen_name", StringType()),
         StructField("original_tweet_id", LongType()),
     ]
 )
 
-COUNTS = StructType(
+_WINDOW_COUNT = StructType(
     [
         StructField("window_time", TimestampType()),
-        StructField("count", LongType()),
+        StructField("cnt", LongType()),
     ]
 )
 
-AGGREGATE_FAMILIES = ("counts", "hopping_counts", "mentions", "hashtags", "retweets")
+
+def _top_entity(entity_col: str) -> StructType:
+    """A top-mentions or top-hashtags row (AggregatePayloads.cs)."""
+    return StructType(
+        [
+            StructField("window_time", TimestampType()),
+            StructField(entity_col, StringType()),
+            StructField("tweet_count", LongType()),
+            StructField("follower_count_sum", LongType()),
+            StructField("top_tweets", ArrayType(_TOP_TWEET)),
+        ]
+    )
+
+
+# The five aggregate families (AggregatePayloads.cs:51-58) exactly as the
+# batch (plans.tweets.tweet_aggregates) and streaming
+# (plans.tweets.families_from_stage1) writers produce them. The store
+# reads every family with its schema from here, so a read infers nothing
+# from file footers, and it refuses to write a frame that differs.
+FAMILY_SCHEMAS = {
+    "counts": _WINDOW_COUNT,
+    "hopping_counts": _WINDOW_COUNT,
+    "mentions": _top_entity("screen_name"),
+    "hashtags": _top_entity("hashtag"),
+    "retweets": StructType(
+        [
+            StructField("window_time", TimestampType()),
+            StructField("id", LongType()),
+            StructField("text", StringType()),
+            StructField("tweet_count", LongType()),
+            StructField("follower_count_sum", LongType()),
+            StructField("top_users", ArrayType(StringType())),
+        ]
+    ),
+}

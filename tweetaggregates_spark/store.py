@@ -14,6 +14,19 @@ within files by window_time:
 At 100 TB: date partitioning bounds partition count (365/yr — no
 small-file explosion), and family tables are independent so writers
 parallelize. For finer pruning switch the partition column to hour.
+
+Every family has one declared schema (``schema.FAMILY_SCHEMAS``). Reads
+pass it to the parquet reader, so no job infers it from a file footer;
+writes refuse a frame whose columns differ from it, a check made on the
+driver before any job runs, so a declared-schema read can never
+silently null a column. A family with no directory yet (a young stream
+has closed no tumbling window, so ``counts/`` does not exist) reads as
+an empty frame of its schema.
+
+A REPL answer is at most NUMBER_OF_AGGREGATES_PER_WINDOW entity rows
+per window, so range answers are ordered in one partition after a
+parallel scan: one shuffle to a single reducer that sorts, and no range
+partitioner sampling job as ``orderBy`` would add.
 """
 
 from __future__ import annotations
@@ -23,7 +36,9 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-FAMILIES = ("counts", "hopping_counts", "mentions", "hashtags", "retweets")
+from tweetaggregates_spark.schema import FAMILY_SCHEMAS
+
+FAMILIES = tuple(FAMILY_SCHEMAS)
 
 # entity column per family (FIXTURES.md §3 output schemas)
 ENTITY_COL = {"mentions": "screen_name", "hashtags": "hashtag", "retweets": "id"}
@@ -91,7 +106,9 @@ class AggregateStore:
         mode: str = "overwrite",
         files_per_day: int = 1,
     ) -> None:
-        """Persist one aggregate family; df must carry window_time."""
+        """Persist one aggregate family; df must have the family's
+        declared schema."""
+        _check_schema(family, df)
         (
             self._prep(df, family, files_per_day)
             .write.mode(mode)
@@ -107,6 +124,7 @@ class AggregateStore:
         the Spark-file equivalent of the reference's idempotent keyed
         RocksDB puts (RocksDBStore.cs:70-135). batch_id is a discovered
         partition column on read and dropped."""
+        _check_schema(family, df)
         (
             df.withColumn("window_date", F.to_date("window_time"))
             .repartition("window_date")
@@ -259,9 +277,20 @@ class AggregateStore:
     # -- read surface -------------------------------------------------------
 
     def read(self, family: str) -> DataFrame:
-        df = self.spark.read.parquet(self._path(family))
-        drop = [c for c in ("window_date", "batch_id") if c in df.columns]
-        return df.drop(*drop)
+        """The family's rows with its declared schema, read without a
+        schema-inference job; the ``window_date`` and ``batch_id``
+        partition columns are dropped. A family never written reads as
+        an empty frame. This is also the export path for a range too
+        large to collect: filter it and write it out."""
+        schema = FAMILY_SCHEMAS[family]
+        path = self._path(family)
+        if not os.path.isdir(path):
+            return self.spark.createDataFrame([], schema)
+        return (
+            self.spark.read.schema(schema)
+            .parquet(path)
+            .select(*schema.fieldNames())
+        )
 
     def get_summary(self) -> DataFrame:
         """Q1 (getsummary): fold over the counts family
@@ -274,7 +303,7 @@ class AggregateStore:
         """Q2 (getcounts start end): half-open ordered range scan
         (RocksDBStore.cs:145-149). The window_time filter prunes to the
         covered window_date partitions before any file is opened."""
-        return self._range(self.read("counts"), start, end)
+        return self._range(self.read("counts"), start, end, None)
 
     def get_top(self, family: str, start: str, end: str, entity: str | None = None) -> DataFrame:
         """Q3/Q4/Q5 (gettop{mentions,hashtags,retweets}string): range
@@ -282,10 +311,11 @@ class AggregateStore:
         semantics, not the reference's prefix-seek quirk where the
         entity filter affects only the first seek (RocksDBStore.cs:
         242-245) — documented deviation (SURVEY §2.8 Q3)."""
-        df = self._range(self.read(family), start, end)
+        ecol = ENTITY_COL.get(family)
+        df = self.read(family)
         if entity is not None:
-            df = df.filter(F.col(ENTITY_COL.get(family, "entity")) == entity)
-        return df
+            df = df.filter(F.col(ecol) == entity)
+        return self._range(df, start, end, ecol)
 
     def get_top_prefix_seek(
         self, family: str, start: str, end: str, entity: str
@@ -296,16 +326,20 @@ class AggregateStore:
         entity') with key >= that seek point inside the time range comes
         back (RocksDBStore.cs:242-245, 236-264). Provided for byte-parity
         replay; `get_top` implements the intended semantics."""
-        ecol = ENTITY_COL.get(family, "entity")
+        ecol = ENTITY_COL[family]
         df = self.read(family)
         start_ts = F.lit(start).cast("timestamp")
         after_seek = (F.col("window_time") > start_ts) | (
             (F.col("window_time") == start_ts)
             & (F.col(ecol).cast("string") >= entity)
         )
-        return df.filter(
-            after_seek & (F.col("window_time") < F.lit(end).cast("timestamp"))
-        ).orderBy("window_time", F.col(ecol).cast("string"))
+        return _one_ordered_partition(
+            df.filter(
+                after_seek
+                & (F.col("window_time") < F.lit(end).cast("timestamp"))
+            ),
+            ecol,
+        )
 
     def get_recent(self, family: str, n: int) -> DataFrame:
         """Q6 (getrecent*string N): newest N by window_time
@@ -331,8 +365,42 @@ class AggregateStore:
         return out
 
     @staticmethod
-    def _range(df: DataFrame, start: str, end: str) -> DataFrame:
-        return df.filter(
-            (F.col("window_time") >= F.lit(start).cast("timestamp"))
-            & (F.col("window_time") < F.lit(end).cast("timestamp"))
-        ).orderBy("window_time")
+    def _range(df: DataFrame, start: str, end: str, ecol: str | None) -> DataFrame:
+        return _one_ordered_partition(
+            df.filter(
+                (F.col("window_time") >= F.lit(start).cast("timestamp"))
+                & (F.col("window_time") < F.lit(end).cast("timestamp"))
+            ),
+            ecol,
+        )
+
+
+def _one_ordered_partition(df: DataFrame, ecol: str | None) -> DataFrame:
+    """An answer in the reference's ticks‖entity key order
+    (RocksDBStore.cs:18-21) as one sorted partition: the scan stays
+    parallel, and unlike ``orderBy`` no range-partitioner sampling job
+    runs. Answers are small by construction (see the module docstring)."""
+    order = [F.col("window_time")]
+    if ecol is not None:
+        order.append(F.col(ecol).cast("string"))
+    return df.repartition(1).sortWithinPartitions(*order)
+
+
+def _check_schema(family: str, df: DataFrame) -> None:
+    """Refuse a frame whose column names or types (nullability aside)
+    differ from the family's declared schema. Reads only the analyzed
+    schema, so no job runs."""
+    want = FAMILY_SCHEMAS.get(family)
+    if want is None:
+        raise ValueError(
+            f"unknown aggregate family {family!r}; expected one of {FAMILIES}"
+        )
+
+    def cols(schema):
+        return [(f.name, f.dataType.simpleString()) for f in schema]
+
+    if cols(df.schema) != cols(want):
+        raise ValueError(
+            f"{family}: frame columns {cols(df.schema)} differ from the "
+            f"declared {cols(want)}"
+        )
