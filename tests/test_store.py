@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import collections
 import datetime
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -49,6 +50,27 @@ def test_range_scan_half_open(store):
     # half-open: excludes the last window
     assert len(got) == len(counts) - 1
     assert [r.window_time for r in got] == [r.window_time for r in counts[:-1]]
+
+
+def test_range_read_prunes_uncovered_dates(spark, tmp_path):
+    """A range read lists only the window_date partitions its
+    [start, end) covers: with the other date's file made unreadable, a
+    one-date range still answers, and its scan carries the derived
+    window_date bound as a partition filter."""
+    st = AggregateStore(spark, str(tmp_path / "agg"))
+    rows = [
+        (datetime.datetime(2024, 1, day, 0, minute), minute + 1)
+        for day in (1, 2)
+        for minute in (0, 5)
+    ]
+    st.write("counts", spark.createDataFrame(rows, FAMILY_SCHEMAS["counts"]))
+    other = tmp_path / "agg" / "counts" / "window_date=2024-01-02"
+    for part in other.glob("*.parquet"):
+        part.write_bytes(b"not parquet")
+    got = st.get_counts("2024-01-01 00:00:00", "2024-01-01 23:59:00")
+    assert [tuple(r) for r in got.collect()] == rows[:2]
+    plan = got._jdf.queryExecution().executedPlan().toString()
+    assert re.search(r"PartitionFilters: \[[^\]]*window_date", plan), plan
 
 
 def test_recent_n(store):

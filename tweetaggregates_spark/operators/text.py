@@ -8,7 +8,6 @@ the row path, embarrassingly parallel (no shuffle except noted).
 
 from __future__ import annotations
 
-import functools
 from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
@@ -21,7 +20,6 @@ from tweetaggregates_spark.functions.textstats import (
     tokens,
     word_shingles,
 )
-from tweetaggregates_spark.session import run_concurrently
 
 BPE_ISH_RE = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
 
@@ -703,11 +701,11 @@ def bm25_topk(
 
     Scale shape: ONE token scan of the corpus feeds tf (doc,token
     groupBy), dl (doc groupBy) and df (token groupBy on tf's
-    exchange); N and total-token count are a 1-row aggregate crossed
-    in as a literal; the query-term table (|Q| x n_query_terms rows)
-    is cut per query row with no shuffle and BROADCASTS onto tf, so
-    the corpus never shuffles for the join — the only corpus-sized
-    exchanges are the two index-build groupBys a real system would
+    exchange); N and total-token count are a 1-row aggregate of the
+    same (doc,token) groups, crossed in as a literal; the query-term
+    table (|Q| x n_query_terms rows) is cut per query row with no
+    shuffle and BROADCASTS onto tf, so the corpus never shuffles for
+    the join — the only corpus-sized exchanges are the two index-build groupBys a real system would
     persist (see inverted_index / build_token_index). Final top-k is
     a per-query window over |Q| x matched-docs rows."""
     # tokens_col / query_tokens_col: optional pre-tokenized array
@@ -1782,9 +1780,10 @@ class TokenIndex(NamedTuple):
     stats: DataFrame   # 1 row: (n_docs, total_tokens)
 
     def families(self) -> list[tuple[str, DataFrame]]:
-        """The persisted families in WRITE ORDER: dl first (its write
-        materializes a built index's lazy tf checkpoint) and tf last —
-        the commit point ``read_token_index`` keys versions off."""
+        """The persisted families in COMMIT ORDER, tf last — the commit
+        point ``read_token_index`` keys versions off. ``commit_bases``
+        writes tf's temp first: for a built index that materializes the
+        lazy checkpoint dl / df / stats read."""
         return [
             ("dl", self.dl), ("df", self.dft), ("stats", self.stats),
             ("tf", self.tf),
@@ -1801,39 +1800,44 @@ def _token_index(
     (doc, token) shuffle. ``tokens_col``: optional pre-tokenized array
     column (exactly tokens(text)); value-identical.
 
-    tf MATERIALIZES (lazy local checkpoint — computed on first action,
-    then shared), and dl / df / total_tokens all derive from it by
-    value-identical aggregation (dl = Σ tf per doc = the raw token
-    count; total = Σ tf overall). tf is consumed four times in the
-    BM25 scoring plan and by all four family writes; unmaterialized,
-    Spark re-ran the tokenize+explode+groupBy pipeline per consumer
-    (r15 measured: 4.6 s -> 2.x s at sf0.1, 44-Exchange plan
-    collapses). This is also the honest 100 TB shape: the
-    materialized tf IS the inverted index a deployment persists
-    (build_token_index); only n_docs needs the corpus (tokenless docs
-    never join tf but still count in idf)."""
+    Each doc row also explodes one NULL token, a sentinel whose
+    (doc_id, NULL) group has tf 0 and exists once per distinct doc id,
+    tokenless docs included. The (doc, token) groups MATERIALIZE (lazy
+    local checkpoint, computed on first action, then shared; r15:
+    re-running tokenize+explode+groupBy per consumer cost 4.6 s ->
+    2.x s at sf0.1) and all four stats derive from them: tf drops the
+    sentinels, dl (Σ tf per doc) and df come from tf, and stats is one
+    1-row aggregate — n_docs counts the non-NULL doc ids' sentinels
+    (= countDistinct(id_col)), total_tokens = Σ tf. The materialized tf
+    IS the inverted index a deployment persists (build_token_index)."""
     doc_toks = (
         F.col(tokens_col) if tokens_col else tokens(F.col(text_col))
     )
-    tok = df.select(
-        F.col(id_col).alias("doc_id"),
-        F.posexplode(doc_toks).alias("pos", "token"),
-    )
-    tf = (
-        tok.groupBy("doc_id", "token")
-        .agg(F.count(F.lit(1)).alias("tf"))
+    # coalesce first: concat with a NULL array is NULL, which would
+    # drop a NULL-text doc's sentinel and with it its n_docs count
+    grams = (
+        df.select(
+            F.col(id_col).alias("doc_id"),
+            F.explode(
+                F.concat(
+                    F.coalesce(doc_toks, F.array().cast("array<string>")),
+                    F.array(F.lit(None).cast("string")),
+                )
+            ).alias("token"),
+        )
+        .groupBy("doc_id", "token")
+        .agg(F.count("token").alias("tf"))
         .localCheckpoint(eager=False)
     )
+    tf = grams.filter(F.col("token").isNotNull())
+    sentinel = F.col("token").isNull() & F.col("doc_id").isNotNull()
+    total = F.coalesce(F.sum("tf"), F.lit(0).cast("long"))
     return TokenIndex(
         tf=tf,
         dl=tf.groupBy("doc_id").agg(F.sum("tf").alias("dl")),
         dft=tf.groupBy("token").agg(F.count(F.lit(1)).alias("doc_freq")),
-        stats=df.agg(F.countDistinct(id_col).alias("n_docs")).crossJoin(
-            tf.agg(
-                F.coalesce(F.sum("tf"), F.lit(0).cast("long")).alias(
-                    "total_tokens"
-                )
-            )
+        stats=grams.agg(
+            F.count_if(sentinel).alias("n_docs"), total.alias("total_tokens")
         ),
     )
 
@@ -1851,17 +1855,14 @@ def build_token_index(
     real system persists them and serves retrieval from the index
     (what Lucene/ES call the inverted index + norms + collection
     stats). Same versioned-store contract as the band/CDC/IVF-PQ
-    index families (``versioned_store``): this writes base ``v=0`` for
-    four families — tf (the postings with term frequencies), dl (doc
-    lengths — Lucene's norms), df (document frequencies) and the
-    1-row collection stats. df and stats are ADDITIVE over
-    disjoint-doc batches, so increments fold by sum — no corpus
-    rescan ever (``append_token_index_delta``)."""
+    index families (``versioned_store``): this commits base ``v=0``
+    for four families (temp writes, then renames, tf last) — tf (the
+    postings with term frequencies), dl (doc lengths — Lucene's
+    norms), df (document frequencies) and the 1-row collection stats.
+    df and stats are ADDITIVE over disjoint-doc batches, so increments
+    fold by sum — no corpus rescan ever (``append_token_index_delta``)."""
     from tweetaggregates_spark import versioned_store as vs
 
-    # dl's temp write materializes the shared lazy tf checkpoint
-    # alone, then the df/stats/tf temps overlap as jobs over it; the
-    # rename commit order (tf_base last) is unchanged.
     vs.commit_bases(
         path,
         [
@@ -1881,29 +1882,22 @@ def append_token_index_delta(
 ) -> None:
     """Fold a NEW batch into the persisted retrieval index: O(batch)
     writes — the batch's own tf/dl rows and its additive df/stats
-    deltas land at ``<family>/v=<ingest_id>``; the corpus is never
-    rescanned. Assumes batch doc ids are disjoint from prior ingests
-    (the same contract as every index family here). Per-version
-    overwrite + tf-written-last make a replayed ingest idempotent:
-    a crash mid-append leaves no tf/v=<id>, so readers ignore the
-    orphan families and the retry overwrites them."""
-    frames = _token_index(batch, text_col, id_col).families()
+    deltas commit at ``<family>/v=<ingest_id>`` through
+    ``versioned_store.commit_bases`` (temps, then renames, tf last);
+    the corpus is never rescanned. Assumes batch doc ids are disjoint
+    from prior ingests (the same contract as every index family here)
+    and one append at a time per root (they share the temp dirs).
+    A crash mid-append leaves no tf/v=<id>, so readers ignore the
+    orphans and the retry sweeps them; ``allow_replace`` makes a
+    replayed committed ingest re-commit its own version (idempotent)."""
+    from tweetaggregates_spark import versioned_store as vs
 
-    def _w(sub: str, frame) -> None:
-        frame.write.mode("overwrite").parquet(
-            f"{path}/{sub}/v={int(ingest_id)}"
-        )
-
-    # dl writes first and alone (materializing the shared lazy tf
-    # checkpoint), df/stats then overlap, and tf still writes strictly
-    # LAST — it is the commit point readers key versions off, so
-    # crash-idempotence is unchanged.
-    _w(*frames[0])
-    run_concurrently(
-        batch.sparkSession,
-        [functools.partial(_w, sub, frame) for sub, frame in frames[1:-1]],
+    vs.commit_bases(
+        path,
+        _token_index(batch, text_col, id_col).families(),
+        int(ingest_id),
+        allow_replace=True,
     )
-    _w(*frames[-1])
 
 
 def read_token_index(
@@ -1970,7 +1964,7 @@ def compact_token_index(
     idx = read_token_index(spark, path, below)
     newv = max(deltas)
     # each frame folds its OWN persisted family (no shared lazy
-    # checkpoint), so the post-first temps overlap safely
+    # checkpoint), so the non-final temps overlap safely
     vs.commit_bases(
         path,
         [(f"{sub}_base", frame) for sub, frame in idx.families()],

@@ -282,15 +282,26 @@ class AggregateStore:
         partition columns are dropped. A family never written reads as
         an empty frame. This is also the export path for a range too
         large to collect: filter it and write it out."""
+        return self._between(family, None, None)
+
+    def _between(self, family: str, start: str | None, end: str | None) -> DataFrame:
+        """``read`` restricted to ``start <= window_time < end`` (no
+        bound when start is None). The derived ``window_date`` bounds
+        prune to the covered date partitions before any file is listed;
+        the window_time bounds prune row groups inside a day."""
         schema = FAMILY_SCHEMAS[family]
         path = self._path(family)
         if not os.path.isdir(path):
             return self.spark.createDataFrame([], schema)
-        return (
-            self.spark.read.schema(schema)
-            .parquet(path)
-            .select(*schema.fieldNames())
-        )
+        df = self.spark.read.schema(schema).parquet(path)
+        if start is not None:
+            lo, hi = F.lit(start).cast("timestamp"), F.lit(end).cast("timestamp")
+            df = df.filter(
+                F.col("window_date").between(F.to_date(lo), F.to_date(hi))
+                & (F.col("window_time") >= lo)
+                & (F.col("window_time") < hi)
+            )
+        return df.select(*schema.fieldNames())
 
     def get_summary(self) -> DataFrame:
         """Q1 (getsummary): fold over the counts family
@@ -301,9 +312,9 @@ class AggregateStore:
 
     def get_counts(self, start: str, end: str) -> DataFrame:
         """Q2 (getcounts start end): half-open ordered range scan
-        (RocksDBStore.cs:145-149). The window_time filter prunes to the
-        covered window_date partitions before any file is opened."""
-        return self._range(self.read("counts"), start, end, None)
+        (RocksDBStore.cs:145-149), pruned to the covered window_date
+        partitions before any file is opened (``_between``)."""
+        return _one_ordered_partition(self._between("counts", start, end), None)
 
     def get_top(self, family: str, start: str, end: str, entity: str | None = None) -> DataFrame:
         """Q3/Q4/Q5 (gettop{mentions,hashtags,retweets}string): range
@@ -312,10 +323,10 @@ class AggregateStore:
         entity filter affects only the first seek (RocksDBStore.cs:
         242-245) — documented deviation (SURVEY §2.8 Q3)."""
         ecol = ENTITY_COL.get(family)
-        df = self.read(family)
+        df = self._between(family, start, end)
         if entity is not None:
             df = df.filter(F.col(ecol) == entity)
-        return self._range(df, start, end, ecol)
+        return _one_ordered_partition(df, ecol)
 
     def get_top_prefix_seek(
         self, family: str, start: str, end: str, entity: str
@@ -327,18 +338,13 @@ class AggregateStore:
         back (RocksDBStore.cs:242-245, 236-264). Provided for byte-parity
         replay; `get_top` implements the intended semantics."""
         ecol = ENTITY_COL[family]
-        df = self.read(family)
         start_ts = F.lit(start).cast("timestamp")
         after_seek = (F.col("window_time") > start_ts) | (
             (F.col("window_time") == start_ts)
             & (F.col(ecol).cast("string") >= entity)
         )
         return _one_ordered_partition(
-            df.filter(
-                after_seek
-                & (F.col("window_time") < F.lit(end).cast("timestamp"))
-            ),
-            ecol,
+            self._between(family, start, end).filter(after_seek), ecol
         )
 
     def get_recent(self, family: str, n: int) -> DataFrame:
@@ -363,16 +369,6 @@ class AggregateStore:
         }
         out["summary"] = self.get_summary()
         return out
-
-    @staticmethod
-    def _range(df: DataFrame, start: str, end: str, ecol: str | None) -> DataFrame:
-        return _one_ordered_partition(
-            df.filter(
-                (F.col("window_time") >= F.lit(start).cast("timestamp"))
-                & (F.col("window_time") < F.lit(end).cast("timestamp"))
-            ),
-            ecol,
-        )
 
 
 def _one_ordered_partition(df: DataFrame, ecol: str | None) -> DataFrame:

@@ -12,9 +12,10 @@ callers keep their fold semantics (what a "merge" means is
 per-family).
 
 Layout: ``<root>/<delta_sub>/v=<N>`` per-ingest deltas (N = the
-monotone ingest/batch id; per-version overwrite makes a replayed
-ingest idempotent) and ``<root>/<base_sub>/v=<B>`` compacted bases
-(B = the newest version folded into the base).
+monotone ingest/batch id; per-version overwrite, or ``commit_bases``
+with ``allow_replace``, makes a replayed ingest idempotent) and
+``<root>/<base_sub>/v=<B>`` compacted bases (B = the newest version
+folded into the base).
 
 The contract, shared verbatim by every family:
 
@@ -30,10 +31,11 @@ The contract, shared verbatim by every family:
   that are unreadable (no matching final-family base) and are swept
   by the retry before re-renaming (``os.rename`` cannot replace a
   non-empty dir — without the sweep an inline-at-trigger-start
-  compaction would wedge its stream on every retry). The first temp
-  writes alone and the rest overlap, so a caller committing more
-  than two families must not let them share unmaterialized lineage
-  beyond what the first family's write materializes.
+  compaction would wedge its stream on every retry). The commit
+  point's temp writes first and alone, then the rest overlap, so a
+  caller committing more than two families must not let them share
+  unmaterialized lineage beyond what the commit point's write
+  materializes.
 * **cleanup**: folded deltas (v <= newv) and superseded bases
   (v < newv) are removed only AFTER the commit point.
 
@@ -133,27 +135,26 @@ def commit_bases(
     newv: int,
     allow_replace: bool = False,
 ) -> None:
-    """Atomically commit ``frames`` — ``(base_sub, df)`` in COMMIT
-    ORDER, the last being the commit point readers key off — as base
-    version ``newv``. Every frame materializes fully in a temp dir
-    BEFORE any rename; non-final targets are swept first (retry after
-    a crash between renames re-finds its own orphan). ``allow_replace``
-    permits replacing an existing FINAL target (only for compactions
-    whose fold can change without a new version, e.g. quarantine
-    re-admission relabeling clusters) — it trades the no-pre-existing-
-    name guarantee for in-place replacement, so callers should skip
-    the commit entirely when the fold is a no-op.
+    """Atomically commit ``frames`` — ``(sub, df)`` in COMMIT ORDER,
+    the last being the commit point readers key off — as version
+    ``newv`` (a compacted base or a per-ingest delta). Every frame
+    materializes fully in a temp dir BEFORE any rename; non-final
+    targets are swept first (retry after a crash between renames
+    re-finds its own orphan). ``allow_replace`` permits replacing an
+    existing FINAL target: a compaction whose fold can change without
+    a new version (quarantine re-admission relabeling clusters), or a
+    replayed delta re-committing its own ingest. It trades the
+    no-pre-existing-name guarantee for in-place replacement, so a
+    compaction should skip the commit when its fold is a no-op.
 
-    The FIRST frame's temp writes alone; the remaining temps then
-    overlap through ``session.run_concurrently``. The renames stay
-    strictly serial in commit order, so crash-safety is unchanged (the
-    commit point is the LAST rename, never a temp write). With more
-    than two frames, the frames after the first must share no
-    UNMATERIALIZED lazy checkpoint beyond one the first frame's write
-    materializes — otherwise concurrent temp writes recompute it (the
-    token index: dl's write materializes the shared tf checkpoint,
-    then df/stats/tf are independent jobs over it). With two frames
-    the second write runs alone, so the temps are written serially."""
+    The commit point's temp writes first and alone, then the others
+    overlap through ``session.run_concurrently``; the renames stay
+    serial in commit order, commit point last, so crash-safety does
+    not depend on the write order. With more than two frames the
+    others must share no UNMATERIALIZED lazy checkpoint beyond one the
+    commit point's write materializes, or each concurrent write
+    recomputes it (the token index: tf's write materializes the
+    (doc, token) groups dl/df/stats read). Two frames write serially."""
 
     def _tmp(sub: str) -> str:
         return f"{root}/.compact_{sub}_tmp"
@@ -163,10 +164,10 @@ def commit_bases(
         df.write.mode("overwrite").parquet(_tmp(sub))
         os.makedirs(f"{root}/{sub}", exist_ok=True)
 
-    (first_sub, first_df), rest = frames[0], frames[1:]
-    _write_tmp(first_sub, first_df)
+    *rest, (last_sub, last_df) = frames
+    _write_tmp(last_sub, last_df)
     run_concurrently(
-        first_df.sparkSession,
+        last_df.sparkSession,
         [functools.partial(_write_tmp, sub, df) for sub, df in rest],
     )
     for i, (sub, _) in enumerate(frames):
